@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.Try
 
 /** Benchmark harness. Round-1's single-JVM n=1 pass was contaminated
@@ -24,7 +23,6 @@ object Bench {
 
   def main(args: Array[String]): Unit =
     if (args.length >= 3 && args(0) == "--child") child(args(1), args(2))
-    else if (args.contains("--ab")) abOrchestrate()
     else orchestrate()
 
   /** Child mode: run ONE query `Reps` times in this fresh JVM and print
@@ -32,14 +30,7 @@ object Bench {
     */
   private def child(name: String, sfDir: String): Unit = {
     val reps = sys.env.get("GRAFT_BENCH_CHILD_REPS").map(_.toInt).getOrElse(Reps)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.execution.sortBeforeRepartition", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     // one UNTIMED warmup pass: JIT + codegen compilation dominate the
@@ -77,8 +68,9 @@ object Bench {
 
   /** Class-data-sharing setup for the children (round 13, VERDICT r12
     * item 1): each of the 168 forked children pays ~9 s of fixed JVM +
-    * SparkSession startup, dominated by classloading (SessionProbe at
-    * local[32]: session-create 4.8 s + first-action 4.1 s), which is
+    * SparkSession startup, dominated by classloading (measured at
+    * local[32] by a one-round session probe, since retired:
+    * session-create 4.8 s + first-action 4.1 s), which is
     * harness cost, not query cost — it is what pushed the driver's
     * 32-core run past its wall-clock budget in round 12 (rc 124). A
     * dynamic CDS archive dumped once by an UNTIMED child and mapped by
@@ -98,7 +90,7 @@ object Bench {
       val f = new java.io.File(e)
       if (!f.isDirectory) e
       else {
-        val jar = java.io.File.createTempFile("graft-bench-cp", ".jar")
+        val jar = java.io.File.createTempFile(tempPrefix("cp"), ".jar")
         jar.deleteOnExit()
         val out = new java.util.zip.ZipOutputStream(
           new java.io.BufferedOutputStream(new java.io.FileOutputStream(jar)))
@@ -119,6 +111,30 @@ object Bench {
     }.mkString(sep)
   }.toOption
 
+  /** Temp-file name prefix carrying this parent's pid, so a later run
+    * can tell the files of a live concurrent bench from those a bench
+    * killed at its time limit leaked (`deleteOnExit` never ran).
+    */
+  private def tempPrefix(kind: String): String =
+    s"graft-bench-$kind-${ProcessHandle.current.pid}-"
+
+  /** Delete the CDS jars and archives left in `dir` (the bench passes
+    * `java.io.tmpdir`) by benches that are no longer running: files
+    * whose pid is dead, and files from before the pid was part of the
+    * name. Each run jars the classpath afresh (class bytes change on
+    * every recompile), so nothing is reused.
+    */
+  private[graft] def sweepLeakedTemp(dir: java.io.File): Unit = Try {
+    val Cds = """graft-bench-(?:cp|cds)(?:-(\d+)-)?.*\.(?:jar|jsa)""".r
+    Option(dir.listFiles()).toSeq.flatten.foreach { f =>
+      f.getName match {
+        case Cds(pid) if pid == null || !ProcessHandle.of(pid.toLong).isPresent =>
+          f.delete()
+        case _ =>
+      }
+    }
+  }
+
   /** Dump the archive from one untimed child (the calib query, so the
     * dump run loads the full parquet/SQL/codegen stack) and return the
     * (classpath, archive) pair for the timed children, or None.
@@ -126,7 +142,7 @@ object Bench {
   private def cdsPrepare(sfDir: String): Option[(String, String)] =
     cdsClasspath().flatMap { cp =>
       val archive = Try {
-        val a = java.io.File.createTempFile("graft-bench-cds", ".jsa")
+        val a = java.io.File.createTempFile(tempPrefix("cds"), ".jsa")
         a.delete(); a.deleteOnExit()
         a.getAbsolutePath
       }.toOption
@@ -138,24 +154,17 @@ object Bench {
     }
 
   /** Fork one child JVM for `name`; None if the fork or its output parse
-    * fails (caller falls back to in-process). `gc` overrides the child's
-    * collector (the parent's GC flag is stripped first); `childReps`
-    * overrides the child's timed-rep count; `cpOverride`/`extraFlags`
-    * carry the CDS classpath/archive flags (see [[cdsPrepare]]).
+    * fails (caller falls back to in-process). `childReps` overrides the
+    * child's timed-rep count; `cpOverride`/`extraFlags` carry the CDS
+    * classpath/archive flags (see [[cdsPrepare]]).
     */
   private def forkOne(name: String, sfDir: String,
-                      gc: Option[String] = None,
                       childReps: Option[Int] = None,
                       cpOverride: Option[String] = None,
                       extraFlags: Seq[String] = Nil): Option[Seq[Double]] = Try {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val cp = cpOverride.getOrElse(System.getProperty("java.class.path"))
-    val flags = (gc match {
-      case Some(g) =>
-        jvmFlags.filterNot(_.matches("-XX:\\+Use\\w+GC")) :+ s"-XX:+Use${g}GC"
-      case None => jvmFlags
-    }) ++ extraFlags
-    val cmd = Seq(javaBin) ++ flags ++
+    val cmd = Seq(javaBin) ++ jvmFlags ++ extraFlags ++
       Seq("-cp", cp, "graft.Bench", "--child", name, sfDir)
     val out = new StringBuilder
     // merge stderr into stdout: the child is a full Spark app that logs
@@ -180,66 +189,13 @@ object Bench {
     times
   }.toOption
 
-  /** Interleaved idle GC A/B (round 12, VERDICT r11 item 6): the
-    * round-11 protocol was two SEQUENTIAL full-registry sweeps, which
-    * disagreed 2-5x on individual queries and needed a third
-    * isolated-alternating pass to adjudicate. This mode IS that third
-    * pass, for every query in one run: per query, six fresh children
-    * alternating Parallel/G1 (3 per side, each warmup + one timed
-    * rep), so both sides sample the same minutes of machine state and
-    * a drift window hits both collectors equally. Reported per query:
-    * min-of-3 per side (min, not median — the idle floor is the
-    * quantity the A/B compares) and the G1/Parallel ratio. Run:
-    * `runMain graft.Bench --ab` on an IDLE box; commit the log.
-    */
-  private def abOrchestrate(): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val perSide = sys.env.get("GRAFT_BENCH_AB_REPS").map(_.toInt).getOrElse(3)
-    val cds = cdsPrepare(sfDir)
-    val (cdsCp, cdsFlags) = (cds.map(_._1),
-      cds.map(c => Seq(s"-XX:SharedArchiveFile=${c._2}")).getOrElse(Nil))
-    var sumP = 0.0
-    var sumG = 0.0
-    var logRatio = 0.0
-    var n = 0
-    names.foreach { name =>
-      val p = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val g = scala.collection.mutable.ArrayBuffer.empty[Double]
-      (0 until perSide).foreach { _ =>
-        forkOne(name, sfDir, gc = Some("Parallel"), childReps = Some(1),
-          cpOverride = cdsCp, extraFlags = cdsFlags)
-          .foreach(t => p += t.head)
-        forkOne(name, sfDir, gc = Some("G1"), childReps = Some(1),
-          cpOverride = cdsCp, extraFlags = cdsFlags)
-          .foreach(t => g += t.head)
-      }
-      if (p.nonEmpty && g.nonEmpty) {
-        val (mp, mg) = (p.min, g.min)
-        sumP += mp; sumG += mg; logRatio += math.log(mg / mp); n += 1
-        println(f"[bench-ab] $name%-28s parallel=$mp%.3f g1=$mg%.3f " +
-          f"ratio=${mg / mp}%.2f p=[${p.map(x => f"$x%.2f").mkString("/")}] " +
-          f"g=[${g.map(x => f"$x%.2f").mkString("/")}]")
-      } else println(s"[bench-ab] $name FAILED p=${p.size} g=${g.size}")
-    }
-    println(f"[bench-ab] TOTAL parallel=$sumP%.1f g1=$sumG%.1f " +
-      f"geomean_ratio=${math.exp(logRatio / math.max(1, n))}%.3f queries=$n")
-  }
-
   private def orchestrate(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = SparkEntry.queries.keys.toSeq.sorted
 
     // lazy in-process fallback session — only created if a fork fails
     lazy val fallbackSpark = {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.execution.sortBeforeRepartition", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val s = GraftSession.builder().getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       s
     }
@@ -253,6 +209,7 @@ object Bench {
       }
     }.toOption
 
+    sweepLeakedTemp(new java.io.File(System.getProperty("java.io.tmpdir")))
     val cds = cdsPrepare(sfDir)
     val (cdsCp, cdsFlags) = (cds.map(_._1),
       cds.map(c => Seq(s"-XX:SharedArchiveFile=${c._2}")).getOrElse(Nil))

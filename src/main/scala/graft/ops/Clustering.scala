@@ -68,11 +68,16 @@ object Clustering {
   /** Lloyd's k-means over (id, vec): seeded deterministic sample init,
     * `iters` distributed assign/mean rounds (delegates to
     * [[Similarity.ivfCentroids]] — groupBy(cell) mean, no mapPartitions,
-    * centroid table never exceeds k×dim doubles on the driver).
+    * centroid table never exceeds k×dim doubles on the driver). The
+    * model's `k` is the number of centroids actually learned: the seed
+    * draw drops duplicate vectors, so a corpus with fewer than `k`
+    * distinct vectors yields fewer than `k` clusters.
     */
   def kmeans(vecs: DataFrame, k: Int, iters: Int = 3,
-             seed: Long = 42L): KmeansModel =
-    KmeansModel(Similarity.ivfCentroids(vecs, k, iters, seed), k)
+             seed: Long = 42L): KmeansModel = {
+    val cents = Similarity.ivfCentroids(vecs, k, iters, seed)
+    KmeansModel(cents, cents.length)
+  }
 
   /** Per-cluster cardinality and mean cosine-to-centroid — the shard
     * quality report (a collapsed shard shows up as n≈0, an incoherent

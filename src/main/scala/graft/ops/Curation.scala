@@ -1011,7 +1011,8 @@ object Curation {
     *     applies the ≤ RewriteEvery pending replaces on the fly. Spark
     *     jobs per merge: ONE narrow delta aggregate; the heavy
     *     full-frame cycle runs once per RewriteEvery merges (16x fewer
-    *     than the old loop, measured in [[graft.tools.BpeDictProbe]]).
+    *     than the old loop; measurements in SCALE.md, "Distributed BPE
+    *     trainer measured at dictionary scale").
     *
     * DRIVER STATE, the documented trade: O(distinct adjacent pairs)
     * ≤ O(Σ|word|) map+heap entries (vs one row per round before).
@@ -1021,9 +1022,11 @@ object Curation {
     * tables seed far under 1M pairs). The WORDS never pass through the
     * driver.
     *
-    * Returns (merge table, rewrite-round count) — the stats tuple feeds
-    * [[graft.tools.BpeDictProbe]]. `rewriteEvery`/`truncateEvery` are
-    * spec knobs (defaults are the production cadence).
+    * Returns (merge table, rewrite-round count) — the count is what the
+    * dictionary-scale measurements in SCALE.md, "Distributed BPE trainer
+    * measured at dictionary scale", report per run, and what
+    * `CurationOpsSpec` pins. `rewriteEvery`/`truncateEvery` are spec
+    * knobs (defaults are the production cadence).
     */
   private[graft] def bpeMergeRoundsDistributedWithStats(
       dictDf: DataFrame, numMerges: Int,
@@ -1100,7 +1103,9 @@ object Curation {
     // ---- speculative batching over the exact table ----------------
     //
     // A delta JOB per merge leaves ~0.5 s of fixed per-job cost as the
-    // floor (measured, BpeDictProbe). So each round SPECULATES a run
+    // floor (measured on synthetic 2^17/2^19-word dictionaries; see
+    // SCALE.md, "Distributed BPE trainer measured at dictionary scale").
+    // So each round SPECULATES a run
     // of up to `specCap` merges from the current exact table — the
     // argmax plus the next valid entries that are pairwise
     // symbol-disjoint with it (incl. concat symbols; disjoint pairs'
@@ -1130,9 +1135,9 @@ object Curation {
     // 16-stage scan to land one merge. Start at 1, double on a fully
     // accepted round, shrink to half the accepted run on a rejection —
     // worst case degrades to exactly the one-merge round, and
-    // well-separated dictionaries climb to the cap (measured in
-    // BpeDictProbe: a fixed 16-wide speculation was 2-3x SLOWER than
-    // no speculation on the probe tables; adaptive recovers the
+    // well-separated dictionaries climb to the cap (measured on the
+    // synthetic dictionaries: a fixed 16-wide speculation was 2-3x
+    // SLOWER than no speculation on those tables; adaptive recovers the
     // incremental floor there while keeping the batched ceiling).
     val specCap = math.max(1, rewriteEvery)
     var specWidth = 1

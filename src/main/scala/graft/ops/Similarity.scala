@@ -539,6 +539,14 @@ object Similarity {
     * convention); every recall gate was re-verified at the three SFs
     * (OPTIMIZATION_r13.md). Ties on the hash break by the vector
     * value, so the draw is total-order deterministic.
+    *
+    * The sample filter keeps `keep / 2^20` of the hash space with
+    * `keep >= 1`, so its keep-fraction never drops below 2^-20. Past
+    * n = 2^20 · sampleFactor · nlist the sample is therefore ~n / 2^20
+    * rows, not sampleFactor · nlist, and training grows linearly in n
+    * again. On the sized grid ([[sizedIvfNlist]]: nlist ≈ √n, capped
+    * at 2^20) that point is n ≈ 2^46; a fixed nlist = 16 caller passing
+    * `knownCount` reaches it at n ≈ 2^30.
     */
   def ivfCentroids(corpus: DataFrame, nlist: Int, iters: Int = 3,
                    seed: Long = 42L, sampleFactor: Int = 64,
@@ -581,10 +589,11 @@ object Similarity {
     // by `knownCount` — the corpus count the SIZED callers (the auto /
     // rerank audit rows, which size nlist from n) already hold — so no
     // extra job runs anywhere: a dedicated count() here was measured
-    // at +85-190 ms per training at sf0.1 (IvfTrainProbe), the whole
-    // Lloyd cost at that scale. Unknown-count callers (fixed small
-    // nlist — their training is O(n·16·dim), cheap at every rung) keep
-    // the full-corpus path unconditionally.
+    // at +85-190 ms per training at sf0.1 (round 13, by a one-round
+    // training probe since retired), the whole Lloyd cost at that
+    // scale. Unknown-count callers (fixed small nlist — their training
+    // is O(n·16·dim), cheap at every rung) keep the full-corpus path
+    // unconditionally.
     val sampleN = nlist.toLong * sampleFactor
     val train =
       if (knownCount.exists(_ > 6L * sampleN)) {

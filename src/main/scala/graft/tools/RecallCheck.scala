@@ -1,8 +1,8 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.ops.{Dedup, Similarity}
 import graft.queries.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: print the recall of each approximate operator against its
@@ -13,12 +13,7 @@ import org.apache.spark.sql.functions._
 object RecallCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // GRAFT_RECALL_ANN_ONLY=1 skips the document tiers (rung-dir sweeps

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.Try
@@ -198,16 +199,12 @@ object ScaleLadder {
   // ---------------------------------------------------------------- child
 
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     // shuffle partitions scale with the DATA at a real deployment (AQE
     // coalesces back down); the deep rungs let the caller emulate that
-    val parts = sys.env.getOrElse("GRAFT_LADDER_SHUFFLE", cpus)
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val parts = sys.env.getOrElse("GRAFT_LADDER_SHUFFLE", cpus.toString)
+    val s = GraftSession.builder(cpus)
       .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.execution.sortBeforeRepartition", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -444,7 +441,7 @@ object ScaleLadder {
           (q, tag) -> ChildResult(rows, fl, times)
         }.toMap
       } else Map.empty
-    val cpusN = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpusN = GraftSession.cpus
     val results: Seq[(String, Map[String, ChildResult])] = heavy.map { q =>
       val per = rungs.flatMap { case (tag, mult) =>
         val r = prior.get((q, tag)).orElse {
@@ -514,7 +511,7 @@ object ScaleLadder {
       s"""### Scale-ladder run ($verdict)${if (deep) " — deep (x10 → x100)" else ""}
          ~
          ~base=`$baseDir`, rungs ${rungNames.mkString("/")} under `$outRoot`, forked JVM per
-         ~(query, rung), warmup + min-of-$Reps, `local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]`.
+         ~(query, rung), warmup + min-of-$Reps, `local[${GraftSession.cpus}]`.
          ~
          ~$header
          ~$sep

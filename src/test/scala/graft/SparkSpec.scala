@@ -8,6 +8,10 @@ import org.scalatest.matchers.should.Matchers
   * Spark startup is ~5s and every suite's data is tiny).
   */
 object SharedSpark {
+  /** Fixed, not `GraftSession.cpus`: partition counts in the specs must
+    * not depend on the box the suite runs on. */
+  val Cpus = 4
+
   lazy val spark: SparkSession = {
     // per-run warehouse: a previous INTERRUPTED run leaves managed-table
     // directories under ./spark-warehouse that a fresh metastore doesn't
@@ -16,13 +20,8 @@ object SharedSpark {
     // test run hermetic regardless of how the last one ended.
     val warehouse = java.nio.file.Files
       .createTempDirectory("graft-test-warehouse").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(Cpus)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", warehouse)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

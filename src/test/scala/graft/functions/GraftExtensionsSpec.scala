@@ -10,6 +10,9 @@ import org.apache.spark.sql.SparkSession
 class GraftExtensionsSpec extends SparkSpec {
 
   private def withExtendedSession[A](body: SparkSession => A): A = {
+    // materialize the suite session FIRST, so the shared context is
+    // built from its config whichever suite runs first
+    spark.sparkContext
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     // withExtensions (not the spark.sql.extensions conf): the conf is a

@@ -73,6 +73,18 @@ class ClusteringSpec extends SparkSpec {
       Clustering.meanCosine(vecs, init) - 1e-9
   }
 
+  test("kmeans on duplicate vectors reports the centroids it learned as k") {
+    // two distinct vectors, each repeated: the seed dedup draws at most
+    // two centroids however large k is
+    val dups = Seq(
+      (0L, Seq(1.0, 0.0)), (1L, Seq(1.0, 0.0)), (2L, Seq(1.0, 0.0)),
+      (3L, Seq(0.0, 1.0)), (4L, Seq(0.0, 1.0))
+    ).toDF("id", "vec")
+    val model = Clustering.kmeans(dups, k = 4, iters = 2)
+    model.centroids.length shouldBe 2
+    model.k shouldBe model.centroids.length
+  }
+
   test("clusterStats reports cardinality and mean cosine per shard") {
     val cents = Array(Seq(1.0, 0.0), Seq(0.0, 1.0))
     val st = Clustering.clusterStats(vecs, cents)
